@@ -13,7 +13,8 @@ class AzureLogSpec extends SparkSpec {
 
   private val Dir = "/root/reference/Azure/Azure script Proceucers"
 
-  test("azure solar log: all rows parse, clean, and feature") {
+  testOnFiles("azure solar log: all rows parse, clean, and feature",
+      s"$Dir/solar_farm_data_log.csv") {
     val raw = Sources.csvWithTimestamp(spark, s"$Dir/solar_farm_data_log.csv",
       Schemas.solarRaw)
     assert(raw.count() === 3702)
@@ -24,7 +25,8 @@ class AzureLogSpec extends SparkSpec {
     assert(cleaned.filter(!col("time_of_day").isin("Day", "Night")).count() === 0)
   }
 
-  test("azure wind log: all rows parse, clean, and feature") {
+  testOnFiles("azure wind log: all rows parse, clean, and feature",
+      s"$Dir/wind_farm_data_log.csv") {
     val raw = Sources.csvWithTimestamp(spark, s"$Dir/wind_farm_data_log.csv",
       Schemas.windRaw)
     assert(raw.count() === 4098)

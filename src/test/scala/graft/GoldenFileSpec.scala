@@ -63,7 +63,8 @@ class GoldenFileSpec extends SparkSpec {
     assert(n === 0, s"$n rows diverge from golden output")
   }
 
-  test("solar pipeline output contains every golden row with identical values") {
+  testOnFiles("solar pipeline output contains every golden row with identical values",
+      s"$Ref/solar_farm_data_log.csv", s"$Ref/solar_data_processed.csv") {
     val raw = Sources.csvWithTimestamp(spark, s"$Ref/solar_farm_data_log.csv",
       Schemas.solarRaw)
     val cleaned = Pipeline.solarBatch(raw)
@@ -74,7 +75,8 @@ class GoldenFileSpec extends SparkSpec {
         "effective_efficiency", "power_kW", "energy_kWh_10min"))
   }
 
-  test("wind pipeline output contains every golden row with identical values") {
+  testOnFiles("wind pipeline output contains every golden row with identical values",
+      s"$Ref/wind_farm_data_log.csv", s"$Ref/wind_data_processed.csv") {
     val raw = Sources.csvWithTimestamp(spark, s"$Ref/wind_farm_data_log.csv",
       Schemas.windRaw)
     val cleaned = Pipeline.windBatch(raw)

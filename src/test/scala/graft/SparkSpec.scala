@@ -9,6 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sqlc: SparkSession = spark
+
+  /** Register a test that reads external input files. Where any of them
+    * is absent the test is registered as ignored, so it stays in the suite
+    * and reports as skipped without running; wherever all of them exist it
+    * runs unchanged. (A `cancel`/`assume` inside the body would not do:
+    * sbt's JUnit XML report writes a canceled test like a passed one.)
+    */
+  def testOnFiles(name: String, paths: String*)(body: => Any)(
+      implicit pos: org.scalactic.source.Position): Unit =
+    if (paths.forall(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p))))
+      test(name)(body)
+    else ignore(name)(body)
 }
 
 object SparkSpec {

@@ -12,9 +12,16 @@ import graft.warehouse.StarSchema
 class WarehouseSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A committed raw-log fixture (FIXTURES.md A.7) as a local file path. */
+  private def fixture(name: String): String = {
+    val url = Option(getClass.getResource(s"/fixtures/$name")).getOrElse(
+      fail(s"raw-log fixture fixtures/$name is not on the test classpath"))
+    new java.io.File(url.toURI).getPath
+  }
+
   test("J5 Fact_Wind: fact grain = cleaned rows; keys resolve; join-back is lossless") {
     val cleaned = Pipeline.windBatch(Sources.csvWithTimestamp(spark,
-      "/root/reference/wind_farm_data_log.csv", Schemas.windRaw))
+      fixture("wind_farm_data_log.csv"), Schemas.windRaw))
     val (fact, dimStation, dimDateTime, dimWeather) = StarSchema.buildFactWind(cleaned)
     val n = cleaned.count()
     assert(fact.count() === n)
@@ -206,7 +213,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("J5 Fact_Solar builds with the solar weather grain") {
     val cleaned = Pipeline.solarBatch(Sources.csvWithTimestamp(spark,
-      "/root/reference/solar_farm_data_log.csv", Schemas.solarRaw))
+      fixture("solar_farm_data_log.csv"), Schemas.solarRaw))
     val (fact, _, _, dimWeather) = StarSchema.buildFactSolar(cleaned)
     assert(fact.count() === cleaned.count())
     assert(fact.columns.toSeq === Seq("station_key", "datetime_key",
@@ -216,7 +223,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("high-cardinality dims build without a single-partition exchange") {
     val cleaned = Pipeline.windBatch(Sources.csvWithTimestamp(spark,
-      "/root/reference/wind_farm_data_log.csv", Schemas.windRaw))
+      fixture("wind_farm_data_log.csv"), Schemas.windRaw))
     val (_, dimStation, dimDateTime, dimWeather) = StarSchema.buildFactWind(cleaned)
     // hashed surrogates: distinct + projection only, fully parallel
     for (d <- Seq(dimDateTime, dimWeather)) {
@@ -233,7 +240,7 @@ class WarehouseSpec extends SparkSpec {
     // OOM at scale); the genuinely constant dims still broadcast at
     // runtime, just not by hint
     val cleaned = Pipeline.windBatch(Sources.csvWithTimestamp(spark,
-      "/root/reference/wind_farm_data_log.csv", Schemas.windRaw))
+      fixture("wind_farm_data_log.csv"), Schemas.windRaw))
     val (fact, _, _, _) = StarSchema.buildFactWind(cleaned)
     val hinted = fact.queryExecution.analyzed.collect {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
