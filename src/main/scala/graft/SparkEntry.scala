@@ -105,38 +105,14 @@ object SparkEntry {
 
   /** Build-once / rename-publish a fixture table under target/fixtures/:
     * the bench's min-of-3 then times the read path (pass 1 pays the
-    * one-off build), and Verify builds it on first touch. The lock
-    * serializes threads in THIS JVM; against a concurrent second process
-    * each builder writes to a process-unique scratch path and atomically
-    * RENAMES it into place (first rename wins, losers read the winner's
-    * output) — an overwrite-in-place would let process B's job delete
-    * process A's in-flight files. If a builder's inputs change, delete
-    * target/fixtures/ — every fixture feeds an oracle-checked face, so a
-    * stale one fails loudly, never silently. Returns the published path.
+    * one-off build), and Verify builds it on first touch. Returns the
+    * published path; see [[materializeStagedFixture]] for the publish and
+    * the cache key.
     */
   private def materializeFixture(s: SparkSession, name: String, dir: String)(
-      build: => DataFrame): String = {
-    val path =
-      s"target/fixtures/${name}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-    fixtureLock.synchronized {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path + "/_SUCCESS"))) {
-        val tmp = path + s"__tmp_${java.lang.ProcessHandle.current().pid()}"
-        val (tmpP, dstP) = (new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(path))
-        build.write.mode("overwrite").parquet(tmp)
-        // publish by rename: if another process won, drop ours and read
-        // theirs. Local-FS rename into an EXISTING dst nests src inside
-        // it instead of failing, so clean that case up too.
-        if (fs.exists(dstP) || !fs.rename(tmpP, dstP))
-          fs.delete(tmpP, true)
-        val nested = new org.apache.hadoop.fs.Path(dstP, tmpP.getName)
-        if (fs.exists(nested)) fs.delete(nested, true)
-      }
-    }
-    path
-  }
+      build: => DataFrame): String =
+    materializeStagedFixture(s, name, dir)(
+      tmp => build.write.mode("overwrite").parquet(tmp))
 
   /** x123's persisted-oldPairs fixture: in production the previous run's
     * match edges are a STORED table (the `goldenRecordsDelta` contract —
@@ -242,19 +218,45 @@ object SparkEntry {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
 
-  /** Build-once / rename-publish a STAGED DIRECTORY fixture (drain
-    * inputs whose file names/order are load-bearing — the sentinel must
-    * sort last, the EWMA slices must sort in time order — so a plain
-    * DataFrame write cannot produce them). Same lock + atomic-rename
-    * publish as [[materializeFixture]]; `stage` writes the final file
-    * layout into the scratch path, and the explicit _SUCCESS marker is
+  /** Where a fixture built from the tables under `dir` is cached: keyed by
+    * the directory's name AND by the identity of its input files (relative
+    * name, length and modification time of every file under it), so a
+    * changed input under an unchanged path builds a fresh fixture instead
+    * of reading a stale one. A listing, not a content hash: the key costs
+    * one directory walk, not a read of the tables. A change to a builder's
+    * CODE is not in the key: delete target/fixtures/ then — every fixture
+    * feeds an oracle-checked face, so a stale one fails loudly.
+    */
+  private def fixturePath(s: SparkSession, name: String, dir: String): String = {
+    val dirPath = new org.apache.hadoop.fs.Path(dir)
+    val fs = dirPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(dirPath)
+    def files(p: org.apache.hadoop.fs.Path): Seq[String] =
+      fs.listStatus(p).toSeq.flatMap { st =>
+        if (st.isDirectory) files(st.getPath)
+        else Seq(s"${root.toUri.relativize(st.getPath.toUri)}:${st.getLen}:" +
+          st.getModificationTime)
+      }
+    val identity = scala.util.hashing.MurmurHash3.seqHash(files(root).sorted)
+    s"target/fixtures/${name}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_" +
+      f"$identity%08x"
+  }
+
+  /** Build-once / rename-publish a fixture DIRECTORY under
+    * [[fixturePath]]. `stage` writes the final file layout into a scratch
+    * path: a DataFrame write ([[materializeFixture]]), or drain inputs whose
+    * file names/order are load-bearing — the sentinel must sort last, the
+    * EWMA slices must sort in time order. The explicit _SUCCESS marker is
     * touched only after `stage` returns, so a crashed build is retried,
-    * never half-read.
+    * never half-read. The lock serializes threads in THIS JVM; against a
+    * concurrent second process each builder writes to a process-unique
+    * scratch path and atomically RENAMES it into place (first rename wins,
+    * losers read the winner's output) — an overwrite-in-place would let
+    * process B's job delete process A's in-flight files.
     */
   private def materializeStagedFixture(s: SparkSession, name: String,
       dir: String)(stage: String => Unit): String = {
-    val path =
-      s"target/fixtures/${name}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val path = fixturePath(s, name, dir)
     fixtureLock.synchronized {
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(s.sparkContext.hadoopConfiguration)

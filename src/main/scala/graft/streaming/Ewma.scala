@@ -166,7 +166,7 @@ object Ewma {
     import spark.implicits._
     require(inputFiles >= 2,
       s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = java.nio.file.Files.createTempDirectory("graft_s10_").toString
+    val root = Pipeline.tempRoot("s10")
     // preparedIn: a fully staged time-ordered dir ([[stageOrderedInput]],
     // build-once fixture); read untouched. Checkpoint/sink stay fresh.
     val in = preparedIn.getOrElse {
@@ -180,9 +180,6 @@ object Ewma {
     val smoothed = streaming(spark, stream, alpha)
       .select(col("station_id"), unix_micros(col("timestamp")).as("ts_us"),
         col("value"), round(col("ewma"), 3).as("ewma"))
-    val q = Pipeline.parquetSink(smoothed, s"$root/out", s"$root/ckpt",
-      boundedDrain = true).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$root/out")
+    Pipeline.drainToParquet(smoothed, root)
   }
 }

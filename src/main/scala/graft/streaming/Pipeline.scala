@@ -14,6 +14,14 @@ import org.apache.spark.sql.Row
   * dedup runs behind a watermark so state is bounded — the notebook's
   * unwatermarked `dropDuplicates` (databricks.docx:69) grows state forever,
   * which is exactly what kills a 1000-executor job on week two.
+  *
+  * Every stream this object starts goes through one seam: the sinks return
+  * a [[StreamSink]], whose `start()` runs the query on
+  * [[LocalCheckpointFileManager]] so that a `file:` checkpoint's per-trigger
+  * writes fork no process. On disk that drops Hadoop's hidden `.crc`
+  * sidecars and keeps Spark's own state-store checksums (see [[sink]]).
+  * The drains wait with a fixed bound ([[awaitDrain]]) and work in temp
+  * roots deleted at JVM exit ([[tempRoot]]).
   */
 object Pipeline {
 
@@ -39,23 +47,64 @@ object Pipeline {
   /** Run `body` (a bounded drain: build stream → start → await) with
     * `spark.sql.shuffle.partitions` pinned to [[DrainStatePartitions]],
     * restoring the session's value after. The swap mutates SESSION-global
-    * conf, so two drains racing on one SparkSession could pin each
-    * other's (or an unrelated query's) shuffle count — the lock makes
-    * "drains run one at a time" an enforced invariant instead of a
-    * documented assumption about the harness. Batch queries on other
-    * threads are unaffected beyond the conf value itself; only drains
-    * serialize, and every drain is a bounded `AvailableNow` run, so the
-    * hold time is one drain's drain.
+    * conf, so it runs under [[Scoped.conf]]'s lock: two drains racing on
+    * one SparkSession cannot pin each other's (or an unrelated query's)
+    * shuffle count, and "drains run one at a time" is an enforced
+    * invariant. Every drain is a bounded `AvailableNow` run, so the hold
+    * time is one drain's drain.
     */
-  private[this] val drainLock = new Object
   private[graft] def withDrainPartitions[A](
       spark: org.apache.spark.sql.SparkSession)(body: => A): A =
-    drainLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, DrainStatePartitions.toString)
-      try body finally spark.conf.set(key, prev)
+    Scoped.conf(spark,
+      "spark.sql.shuffle.partitions" -> DrainStatePartitions.toString)(body)
+
+  /** A drain's fixed bound on waiting for its stream: far above any drain
+    * this library runs, low enough that a stuck stream fails the caller. */
+  private val DrainTimeoutMs = 10 * 60 * 1000L
+
+  /** Wait for a bounded drain's query to finish. On [[DrainTimeoutMs]] it
+    * stops the query and throws, naming the query and its last progress;
+    * a query that failed rethrows its exception. */
+  private[graft] def awaitDrain(q: StreamingQuery,
+      timeoutMs: Long = DrainTimeoutMs): Unit = {
+    if (!q.awaitTermination(timeoutMs)) {
+      val last = Option(q.lastProgress).fold("none")(_.json)
+      q.stop()
+      throw new java.util.concurrent.TimeoutException(
+        s"drain ${Option(q.name).getOrElse(q.id.toString)} did not finish in " +
+          s"$timeoutMs ms; last progress: $last")
     }
+    q.exception.foreach(e => throw e)
+  }
+
+  private[this] val tempRoots =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private[this] lazy val tempRootsCleanup: Unit = {
+    sys.addShutdownHook(tempRoots.forEach { r =>
+      try LocalCheckpointFileManager.deleteTree(r)
+      catch { case scala.util.control.NonFatal(_) => }
+    })
+    ()
+  }
+
+  /** A fresh `graft_<tag>_*` directory under `java.io.tmpdir`, deleted
+    * with everything under it when the JVM exits. A drain keeps its input,
+    * checkpoint and sink here; the frame it returns reads the sink lazily,
+    * so no earlier point is safe to delete it. */
+  private[graft] def tempRoot(tag: String): String = {
+    tempRootsCleanup
+    val root = java.nio.file.Files.createTempDirectory(s"graft_${tag}_")
+    tempRoots.add(root)
+    root.toString
+  }
+
+  /** Drain `stream` into the checkpointed parquet sink under `root` and
+    * return the sink's rows. */
+  private[streaming] def drainToParquet(stream: DataFrame, root: String): DataFrame = {
+    awaitDrain(parquetSink(stream, s"$root/out", s"$root/ckpt",
+      boundedDrain = true).start())
+    stream.sparkSession.read.parquet(s"$root/out")
+  }
 
   /** Clean + feature a parsed telemetry frame. Works identically on batch
     * and streaming DataFrames (same Catalyst plan either way) — this is the
@@ -181,18 +230,39 @@ object Pipeline {
     * `Trigger.AvailableNow` — process everything available, then stop —
     * the structured-streaming analog of the reference consumer's
     * `consumer_timeout_ms` bounded drain (T2, ref `Solar_Processing.py:61-69`).
+    *
+    * Returned as a [[StreamSink]]: its `start()` runs the query on
+    * [[LocalCheckpointFileManager]] (see [[sink]]).
     */
   def parquetSink(df: DataFrame, path: String, checkpoint: String,
-      boundedDrain: Boolean = false): DataStreamWriter[Row] = {
-    val w = df.writeStream
+      boundedDrain: Boolean = false): StreamSink =
+    sink(df, df.writeStream
       .format("parquet")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-    if (boundedDrain)
-      w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else w
-  }
+      .outputMode("append"), boundedDrain)
+
+  /** The one start seam of every stream graft starts ([[parquetSink]],
+    * [[upsertSink]], [[nearDupSink]] and the drains built on them).
+    *
+    * On a `file:` checkpoint, Spark's default checkpoint file manager
+    * forks a `chmod` and a `readlink` for each checkpoint file when
+    * Hadoop's native library is absent, about 70 processes per trigger of
+    * the telemetry stream. [[StreamSink]] starts the query on
+    * [[LocalCheckpointFileManager]] instead, which makes the same writes
+    * with plain syscalls. On disk the checkpoint then has no hidden Hadoop
+    * `.<name>.crc` sidecars; Spark's own state-store checksum files
+    * (`<n>.delta.crc`) stay. Both managers read and restart each other's
+    * checkpoints. A session that sets
+    * `spark.sql.streaming.checkpointFileManagerClass` itself keeps its
+    * choice.
+    */
+  private def sink(df: DataFrame, w: DataStreamWriter[Row],
+      boundedDrain: Boolean): StreamSink =
+    new StreamSink(
+      if (boundedDrain) w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      else w,
+      df.sparkSession)
 
   /** T2/T3/T4 exercised end-to-end as an ORACLE-CHECKABLE batch query:
     * materialize `batchDf` as `inputFiles` parquet files, re-read them as
@@ -227,7 +297,7 @@ object Pipeline {
     require(keys.nonEmpty, "dedup needs at least one key column")
     require(inputFiles >= 2,
       s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = java.nio.file.Files.createTempDirectory("graft_s08_").toString
+    val root = tempRoot("s08")
     // no sentinel here (the key set drains by input exhaustion), so a
     // shared bulk fixture is read untouched — the s12 discipline
     val in = preparedIn.getOrElse {
@@ -242,10 +312,7 @@ object Pipeline {
       .withWatermark(eventTimeCol, watermark)
       .dropDuplicates(keys)
       .select(keys.map(col): _*)
-    val q = parquetSink(stream, s"$root/out", s"$root/ckpt",
-      boundedDrain = true).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$root/out")
+    drainToParquet(stream, root)
   }
 
   /** s16: [[contentDedup]]'s homoglyph-safe rung through a REAL
@@ -272,7 +339,7 @@ object Pipeline {
       withDrainPartitions(spark) {
     require(inputFiles >= 2,
       s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = java.nio.file.Files.createTempDirectory("graft_s16_").toString
+    val root = tempRoot("s16")
     // no sentinel (skeleton-key set drains by exhaustion): a shared bulk
     // fixture is read untouched — the s12 discipline
     val in = preparedIn.getOrElse {
@@ -288,10 +355,7 @@ object Pipeline {
       watermark, homoglyphSafe = true)
       .select(graft.text.TextAnalysis.fingerprint(
         graft.text.Confusables.skeleton(col(textCol))).as("sk_fp"))
-    val q = parquetSink(survivors, s"$root/out", s"$root/ckpt",
-      boundedDrain = true).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$root/out")
+    drainToParquet(survivors, root)
   }
 
   /** T5's streaming tumbling-window aggregation exercised end-to-end as an
@@ -323,7 +387,7 @@ object Pipeline {
       preparedIn: Option[String] = None): DataFrame = withDrainPartitions(spark) {
     require(inputFiles >= 2,
       s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = java.nio.file.Files.createTempDirectory("graft_s09_").toString
+    val root = tempRoot("s09")
     // preparedIn: a FULLY staged dir (bulk + sentinel, built by
     // stageWindowDrainInput) — the fixture path; read untouched, so it
     // stays shareable. Checkpoint and sink stay fresh per run either way.
@@ -340,10 +404,7 @@ object Pipeline {
         round(sum(col(valueCol)), 2).as("sum_value"))
       .select(unix_timestamp(col("window.start")).as("ws"), col(keyCol),
         col("cnt"), col("sum_value"))
-    val q = parquetSink(stream, s"$root/out", s"$root/ckpt",
-      boundedDrain = true).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$root/out")
+    drainToParquet(stream, root)
   }
 
   /** s17: the CUSTOM typed-imperative aggregate under streaming state —
@@ -369,7 +430,7 @@ object Pipeline {
       preparedIn: Option[String] = None): DataFrame = withDrainPartitions(spark) {
     require(inputFiles >= 2,
       s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = java.nio.file.Files.createTempDirectory("graft_s17_").toString
+    val root = tempRoot("s17")
     // preparedIn: fully staged (stageWindowDrainInput — same sentinel
     // formula as the windowed drain); read untouched
     val in = preparedIn.getOrElse(stageDrainInput(spark, batchDf,
@@ -386,10 +447,7 @@ object Pipeline {
       .groupBy(window(col(eventTimeCol), width))
       .agg(ColumnBridge.column(mg.toAggregateExpression()).as("__hh"))
       .select(unix_timestamp(col("window.start")).as("ws"), col("__hh"))
-    val q = parquetSink(stream, s"$root/out", s"$root/ckpt",
-      boundedDrain = true).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$root/out")
+    drainToParquet(stream, root)
       .select(col("ws"), explode(col("__hh")).as("e"))
       .select(col("ws"), col("e.item").as("item"),
         col("e.est_count").as("est_count"))
@@ -534,7 +592,7 @@ object Pipeline {
     require(gapSeconds > 0, s"gapSeconds must be positive, got $gapSeconds")
     require(inputFiles >= 2,
       s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = java.nio.file.Files.createTempDirectory("graft_s11_").toString
+    val root = tempRoot("s11")
     // preparedIn: fully staged (stageSessionDrainInput); read untouched
     val in = preparedIn.getOrElse(stageDrainInput(spark, batchDf,
       eventTimeCol, col("__mx") + expr(s"INTERVAL '$delay'") +
@@ -551,10 +609,7 @@ object Pipeline {
       .select(col(keyCol), unix_micros(col("sw.start")).as("session_start_us"),
         unix_micros(col("sw.end")).as("session_end_us"), col("cnt"),
         col("sum_value"))
-    val q = parquetSink(stream, s"$root/out", s"$root/ckpt",
-      boundedDrain = true).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$root/out")
+    drainToParquet(stream, root)
   }
 
   /** STREAM-STREAM interval join exercised end-to-end as an
@@ -593,7 +648,7 @@ object Pipeline {
       preparedIn: Option[String] = None): DataFrame = withDrainPartitions(spark) {
     require(inputFiles >= 2,
       s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = java.nio.file.Files.createTempDirectory("graft_s12_").toString
+    val root = tempRoot("s12")
     // a caller that drains several joins over the SAME batch frame can
     // materialize it once (the x123 fixture discipline) and pass the dir;
     // the stream reads it untouched, so the fixture stays shareable
@@ -609,10 +664,7 @@ object Pipeline {
     val joined = intervalJoinStream(stream.filter(leftFilter),
       stream.filter(rightFilter), key, eventTimeCol, eventTimeCol,
       lookback, delay)
-    val q = parquetSink(joined, s"$root/out", s"$root/ckpt",
-      boundedDrain = true).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$root/out")
+    drainToParquet(joined, root)
   }
 
   /** Stream-stream LEFT OUTER interval join exercised as an
@@ -637,7 +689,7 @@ object Pipeline {
       preparedIn: Option[String] = None): DataFrame = withDrainPartitions(spark) {
     require(inputFiles >= 2,
       s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = java.nio.file.Files.createTempDirectory("graft_s15_").toString
+    val root = tempRoot("s15")
     // preparedIn: a FULLY staged dir (bulk + the two-sided sentinel,
     // built once by [[stageOuterJoinDrainInput]]) — read untouched, so
     // the fixture stays shareable; round 14: the per-run part-file copy
@@ -658,10 +710,7 @@ object Pipeline {
       stream.filter(col(sideCol) === rightSide),
       key, eventTimeCol, eventTimeCol, lookback, delay,
       joinType = "leftOuter")
-    val q = parquetSink(joined, s"$root/out", s"$root/ckpt",
-      boundedDrain = true).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$root/out").filter(col(key) >= 0)
+    drainToParquet(joined, root).filter(col(key) >= 0)
   }
 
   /** Stream-STATIC broadcast enrichment exercised as an ORACLE-CHECKABLE
@@ -679,16 +728,13 @@ object Pipeline {
       inputFiles: Int = 2): DataFrame = withDrainPartitions(spark) {
     require(inputFiles >= 2,
       s"the stream must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = java.nio.file.Files.createTempDirectory("graft_s14_").toString
+    val root = tempRoot("s14")
     val in = s"$root/in"
     batchDf.repartition(inputFiles).write.mode("overwrite").parquet(in)
     val stream = spark.readStream.schema(batchDf.schema)
       .option("maxFilesPerTrigger", 1).parquet(in)
       .join(broadcast(dim), Seq(key))
-    val q = parquetSink(stream, s"$root/out", s"$root/ckpt",
-      boundedDrain = true).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$root/out")
+    drainToParquet(stream, root)
   }
 
   /** SCD Type-1 upsert sink: `foreachBatch` MERGE of each micro-batch
@@ -713,10 +759,11 @@ object Pipeline {
     * |keys| + |batch| rows, partition-pruned to the key shuffle.
     */
   def upsertSink(df: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
-      tablePath: String, checkpoint: String): DataStreamWriter[Row] = {
+      tablePath: String, checkpoint: String,
+      boundedDrain: Boolean = false): StreamSink = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     require(orderCols.nonEmpty, "upsert needs a deterministic write order")
-    df.writeStream
+    sink(df, df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val s = batch.sparkSession
@@ -730,7 +777,7 @@ object Pipeline {
           .filter(col("__rn") === 1).drop("__rn")
           .write.mode("overwrite").parquet(s"$tablePath/v=$id")
         ()
-      }
+      }, boundedDrain)
   }
 
   /** Highest published `v=<n>` under `tablePath` (optionally only below a
@@ -761,7 +808,7 @@ object Pipeline {
       preparedIn: Option[String] = None): DataFrame = withDrainPartitions(spark) {
     require(inputFiles >= 2,
       s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = java.nio.file.Files.createTempDirectory("graft_s13_").toString
+    val root = tempRoot("s13")
     // shared-fixture path (the s12/s15 discipline): the stream reads the
     // materialized dir untouched
     val in = preparedIn.getOrElse {
@@ -773,10 +820,8 @@ object Pipeline {
       s"prepared input must span >= 2 files for cross-batch state: $in")
     val stream = spark.readStream.schema(batchDf.schema)
       .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = upsertSink(stream, keyCols, orderCols, s"$root/tbl",
-        s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    awaitDrain(upsertSink(stream, keyCols, orderCols, s"$root/tbl",
+      s"$root/ckpt", boundedDrain = true).start())
     val v = latestVersion(spark, s"$root/tbl")
       .getOrElse(sys.error("upsert drain published no version"))
     spark.read.parquet(s"$root/tbl/v=$v")
@@ -802,8 +847,8 @@ object Pipeline {
     */
   def nearDupSink(df: DataFrame, idCol: String, textCol: String,
       corpusPath: String, pairsPath: String, checkpoint: String,
-      threshold: Double = 0.7, maxBucket: Int = 1000): DataStreamWriter[Row] =
-    df.writeStream
+      threshold: Double = 0.7, maxBucket: Int = 1000): StreamSink =
+    sink(df, df.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -825,7 +870,7 @@ object Pipeline {
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id").parquet(corpusPath)
-      }
+      }, boundedDrain = false)
 
   /** T5/A14: watermarked sliding-window aggregation — the streaming form of
     * the dashboards' recency stats (`Wind_Genration.py:466-478`).

@@ -94,7 +94,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("nearDupSink: micro-batched incremental pairs equal the one-shot dedup") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ndsink").toString
+    val dir = Pipeline.tempRoot("ndsink")
     val d1 = "the quick brown fox jumps over the lazy dog"
     val d2 = d1 // exact dup, same batch
     val d3 = "the quick brown fox leaps over the lazy dog" // near dup, LATER batch
@@ -285,7 +285,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("T2 bounded drain: AvailableNow processes the backlog then stops") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_drain").toString
+    val dir = Pipeline.tempRoot("drain")
     val input = MemoryStream[Tele]
     input.addData(
       Tele("S1", ts("2025-01-01 10:00:00"), 1.0),
@@ -299,7 +299,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   test("S8/T3 checkpointed parquet sink is exactly-once across restarts") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val dir = Pipeline.tempRoot("sink")
     val input = MemoryStream[Tele]
     def start() = Pipeline.parquetSink(input.toDF(),
       s"$dir/data", s"$dir/ckpt").start()
@@ -312,6 +312,87 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(Pipeline.activeQueries(spark).nonEmpty) // S11
     q2.stop()
     assert(spark.read.parquet(s"$dir/data").count() === 2)
+  }
+
+  test("checkpoints restart exactly-once across graft's and Spark's default " +
+      "checkpoint managers, dedup state included") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Pipeline.tempRoot("xmgr")
+    val input = MemoryStream[Tele]
+    val cleaned = Pipeline.transform(input.toDF(), Map("value" -> (0.0, 100.0)),
+      Map.empty, streaming = true)
+    def viaGraft() = Pipeline.parquetSink(cleaned, s"$dir/data", s"$dir/ckpt").start()
+    def viaSpark() = cleaned.writeStream.format("parquet")
+      .option("path", s"$dir/data").option("checkpointLocation", s"$dir/ckpt")
+      .outputMode("append").start()
+    // the data batches one start committed
+    def run(start: () => org.apache.spark.sql.streaming.StreamingQuery,
+        rows: Tele*): Seq[Long] = {
+      val q = start()
+      try { input.addData(rows); q.processAllAvailable() } finally q.stop()
+      q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+    }
+    // the default manager leaves a hidden Hadoop sidecar beside each
+    // offset file it writes; graft's leaves none — so the sidecars show
+    // which manager wrote each batch
+    def sidecar(batch: Long) = java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$dir/ckpt/offsets/.$batch.crc"))
+    val first = run(viaGraft, Tele("S1", ts("2025-01-01 10:00:00"), 1.0),
+      Tele("S2", ts("2025-01-01 10:00:00"), 2.0))
+    // each restart replays a key the other manager's state already holds
+    val second = run(viaSpark, Tele("S1", ts("2025-01-01 10:00:00"), 7.0),
+      Tele("S1", ts("2025-01-01 10:01:00"), 3.0))
+    val third = run(viaGraft, Tele("S1", ts("2025-01-01 10:01:00"), 8.0),
+      Tele("S2", ts("2025-01-01 10:02:00"), 4.0))
+    assert(Seq(first, second, third).forall(_.nonEmpty))
+    assert(!first.exists(sidecar) && second.forall(sidecar) && !third.exists(sidecar),
+      s"batches $first / $second / $third were not written by graft / Spark / graft")
+    assert(spark.conf.getOption(graft.streaming.StreamSink.ManagerKey).isEmpty,
+      "the manager is named only around start()")
+    val out = spark.read.parquet(s"$dir/data")
+    assert(out.count() === 4)
+    assert(out.select("value").as[Double].collect().sorted.toSeq ===
+      Seq(1.0, 2.0, 3.0, 4.0))
+  }
+
+  test("a session's own checkpoint manager choice survives a graft start") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Pipeline.tempRoot("ownmgr")
+    val key = graft.streaming.StreamSink.ManagerKey
+    val theirs = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "FileContextBasedCheckpointFileManager"
+    val input = MemoryStream[Tele]
+    spark.conf.set(key, theirs)
+    try {
+      val q = Pipeline.parquetSink(input.toDF(), s"$dir/data", s"$dir/ckpt").start()
+      try {
+        input.addData(Tele("S1", ts("2025-01-01 10:00:00"), 1.0))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(spark.conf.get(key) === theirs)
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$dir/ckpt/offsets/.0.crc")))
+    } finally spark.conf.unset(key)
+  }
+
+  test("a drain's wait is bounded: a stuck stream is stopped and named; " +
+      "a failed one rethrows its error") {
+    val dir = Pipeline.tempRoot("await")
+    val stuck = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+      .writeStream.format("noop").queryName("never_drains")
+      .option("checkpointLocation", s"$dir/stuck").start()
+    val timeout = intercept[java.util.concurrent.TimeoutException](
+      Pipeline.awaitDrain(stuck, timeoutMs = 200L))
+    assert(timeout.getMessage.contains("never_drains"))
+    assert(timeout.getMessage.contains("last progress"))
+    assert(!stuck.isActive, "a timed-out drain must stop its query")
+    val failing = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+      .writeStream.foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        throw new IllegalStateException("sink exploded")
+      }.option("checkpointLocation", s"$dir/failing").start()
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      Pipeline.awaitDrain(failing))
+    assert(err.getMessage.contains("sink exploded"))
   }
 
   test("s09: sentinel-flushed window drain equals the batch tumbling agg") {
@@ -454,7 +535,7 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("latestVersion picks the highest published version, below-bound excluded") {
-    val root = java.nio.file.Files.createTempDirectory("graft_lv_").toString
+    val root = Pipeline.tempRoot("lv")
     assert(Pipeline.latestVersion(spark, root).isEmpty)
     Seq(0L, 2L, 10L).foreach { v =>
       java.nio.file.Files.createDirectories(
