@@ -29,17 +29,10 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     // nanosAsLong only needs to hold while the parquet footer is resolved
-    // (schema is captured in the relation); save/restore so a later
-    // nanos-typed parquet read in the same session isn't silently re-typed
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    val raw0 =
-      try load(spark, dir, "events")
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    // (schema is captured in the relation); scoped so a later nanos-typed
+    // parquet read in the same session isn't silently re-typed
+    val raw0 = graft.streaming.Scoped.conf(spark,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")(load(spark, dir, "events"))
     // spread sized by INPUT BYTES, not core count (round 14, guide §2.2
     // "make partitioning scale-adaptive — derive from input size"): a
     // cluster reads events from a multi-file layout whose scan

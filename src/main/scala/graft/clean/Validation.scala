@@ -31,13 +31,26 @@ object Validation {
 
   /** P3: conjunctive range-validation filter
     * (ref `Solar_Processing.py:23-26`, `Wind_Processing.py:30-34`).
-    * Bounds as a map col -> (lo, hi); the conjunction is one predicate so
-    * Catalyst pushes it into the scan.
+    * Bounds as a map col -> (lo, hi), inclusive; keeps exactly the rows
+    * that `col(c).between(lo, hi)` keeps.
+    *
+    * Each bound is one [[graft.plans.InRange]] over `col(c)` cast to
+    * double, so the filter evaluates each bounded column once per row.
+    * Catalyst pushes the filter below the projection that computes the
+    * column and substitutes the column's defining expression into it; with
+    * `between` that expression ran once per comparison, twice per row, so
+    * on a JSON-decoded frame each bound re-parsed the message twice.
+    *
+    * Given up: the bounds are no longer pushed to the source as filters
+    * (parquet row-group min/max, the CSV parser). Validation bounds are
+    * physical limits that almost every row meets, so min/max pruning
+    * almost never skips a row group for them.
     */
   def rangeFilter(df: DataFrame, bounds: Map[String, (Double, Double)]): DataFrame =
     if (bounds.isEmpty) df
-    else df.filter(bounds.map { case (c, (lo, hi)) => col(c).between(lo, hi) }
-      .reduce(_ && _))
+    else df.filter(bounds.map { case (c, (lo, hi)) =>
+      graft.plans.Native.inRange(col(c).cast("double"), lo, hi)
+    }.reduce(_ && _))
 
   /** Dead-letter tagging: label each row with the FIRST failing rule's
     * name (rules checked in the given order), null when all pass. A null

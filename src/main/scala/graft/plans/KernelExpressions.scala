@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -735,6 +735,58 @@ case class JaroWinklerSim(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** `lo <= child <= hi` over a double child, with the child evaluated
+  * once. `between(lo, hi)` expands to `child >= lo AND child <= hi`; when
+  * Catalyst pushes that filter below the projection that computes the
+  * column, it substitutes the column's whole defining expression into
+  * both comparisons, and the filter's codegen gets no subexpression
+  * elimination. Here the defining expression appears once.
+  *
+  * Same result as `between` on a double: comparisons go through
+  * `SQLOrderingUtil.compareDoubles`, as Spark's generated `>=`/`<=` do
+  * (NaN equals NaN and sorts above +∞; -0.0 equals 0.0), and a null child
+  * gives null. Null-intolerant, so constraint inference still adds
+  * `isnotnull` on the child's attributes. The bounds are plan constants.
+  * See [[graft.clean.Validation.rangeFilter]].
+  */
+case class InRange(child: Expression, lo: Double, hi: Double)
+  extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"in_range requires double, got ${child.dataType.simpleString}")
+
+  override def dataType: DataType = BooleanType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "in_range"
+  override def sql: String = s"$prettyName(${child.sql}, $lo, $hi)"
+
+  override protected def nullSafeEval(v: Any): Any = {
+    val d = v.asInstanceOf[Double]
+    SQLOrderingUtil.compareDoubles(d, lo) >= 0 && SQLOrderingUtil.compareDoubles(d, hi) <= 0
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cmp = SQLOrderingUtil.getClass.getName.stripSuffix("$") + ".compareDoubles"
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = $cmp($v, ${InRange.javaLiteral(lo)}) >= 0 && " +
+        s"$cmp($v, ${InRange.javaLiteral(hi)}) <= 0;")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): InRange =
+    copy(child = newChild)
+}
+
+object InRange {
+  /** A double as a Java source literal, including NaN and the infinities. */
+  private def javaLiteral(d: Double): String =
+    if (d.isNaN) "Double.NaN"
+    else if (d.isPosInfinity) "Double.POSITIVE_INFINITY"
+    else if (d.isNegInfinity) "Double.NEGATIVE_INFINITY"
+    else s"${d}D"
+}
+
 /** Column-API constructors for the kernel expressions. */
 object Native {
   private def C(e: Expression): Column = ColumnBridge.column(e)
@@ -746,6 +798,10 @@ object Native {
   def cosineRaw(a: Column, b: Column): Column = C(CosineSim(E(a), E(b)))
 
   def dot(a: Column, b: Column): Column = C(DotProduct(E(a), E(b)))
+
+  /** `lo <= v <= hi` for a double column `v`, with `v` evaluated once;
+    * see [[InRange]]. */
+  def inRange(v: Column, lo: Double, hi: Double): Column = C(InRange(E(v), lo, hi))
 
   def nearestCentroids(v: Column, ids: Array[Long], cents: Array[Array[Double]],
       n: Int): Column =

@@ -2,6 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.Scoped
+
 /** Execution-shape helpers for fixed-point loops (round 14, guide §1/§2).
   *
   * Every iterative operator in this repo (PageRank/HITS/label-propagation,
@@ -36,22 +38,15 @@ import org.apache.spark.sql.SparkSession
 object Loops {
 
   /** Run `body` with `spark.sql.adaptive.enabled=false`, restoring the
-    * previous value after. Conf mutation is session-global; the lock
-    * serializes nested/concurrent loop scopes the same way
-    * `Pipeline.withDrainPartitions` serializes drains. Re-entrant use
-    * (a loop composing another loop, e.g. the entity-resolution closure
-    * inside the incremental golden-record path) is safe: the inner scope
-    * sets "false" to "false" and restores "false".
+    * previous value after. Conf mutation is session-global, so the flip
+    * runs under [[graft.streaming.Scoped.conf]]'s one lock, which also
+    * serializes it against drains. Re-entrant use (a loop composing
+    * another loop, e.g. the entity-resolution closure inside the
+    * incremental golden-record path) is safe: the inner scope sets
+    * "false" to "false" and restores "false".
     */
-  def withoutAqe[A](spark: SparkSession)(body: => A): A = lock.synchronized {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def withoutAqe[A](spark: SparkSession)(body: => A): A =
+    Scoped.conf(spark, AqeKey -> "false")(body)
 
   /** Rows per post-shuffle partition a fixed-point round targets: loop
     * frames here are narrow (2–4 longs/strings per row), so 1M rows is
@@ -70,7 +65,7 @@ object Loops {
     * 10¹⁰-row frame on a cluster takes the full configured width.
     */
   def loopPartitions(spark: SparkSession, rows: Long): Int = {
-    val sess = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val sess = spark.conf.get(PartitionsKey).toInt
     val want = (rows + RowsPerPartition - 1) / RowsPerPartition
     math.max(1L, math.min(sess.toLong, want)).toInt
   }
@@ -86,21 +81,13 @@ object Loops {
     * and restore the outer pin on exit.
     */
   def fixedPoint[A](spark: SparkSession, rows: Long)(body: => A): A =
-    lock.synchronized {
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val partKey = "spark.sql.shuffle.partitions"
-      val prevAqe = spark.conf.getOption(aqeKey)
-      val prevPart = spark.conf.get(partKey)
-      spark.conf.set(aqeKey, "false")
-      spark.conf.set(partKey, loopPartitions(spark, rows).toString)
-      try body finally {
-        spark.conf.set(partKey, prevPart)
-        prevAqe match {
-          case Some(v) => spark.conf.set(aqeKey, v)
-          case None => spark.conf.unset(aqeKey)
-        }
-      }
+    // the outer scope only takes the lock, so the width is read from the
+    // same conf the inner scope restores
+    Scoped.conf(spark) {
+      Scoped.conf(spark, AqeKey -> "false",
+        PartitionsKey -> loopPartitions(spark, rows).toString)(body)
     }
 
-  private[this] val lock = new Object
+  private val AqeKey = "spark.sql.adaptive.enabled"
+  private val PartitionsKey = "spark.sql.shuffle.partitions"
 }

@@ -10,7 +10,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("writePartitionedParquet: hive layout, bounded file count, pruned reads") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wpp").toString
+    val dir = graft.streaming.Pipeline.tempRoot("wpp")
     val df = spark.range(0, 3000).select(
       (col("id") % 3).cast("string").as("part"),
       col("id").as("v")).repartition(16) // many input tasks
@@ -86,7 +86,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S5/S6 csv sink + schema'd source roundtrip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val dir = graft.streaming.Pipeline.tempRoot("csv")
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "k", "v")
     Sources.writeCsv(df, dir)
     val schema = StructType(Seq(StructField("id", LongType),
@@ -96,7 +96,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("jsonl sink + schema'd source roundtrip preserves values and nulls") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val dir = graft.streaming.Pipeline.tempRoot("jsonl")
     val df = Seq((1L, Some("a"), 1.5), (2L, None, 2.5)).toDF("id", "k", "v")
     Sources.writeJsonl(df, dir)
     val schema = StructType(Seq(StructField("id", LongType),
@@ -107,7 +107,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("s08 orc sink + source roundtrip preserves types without a schema arg") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = graft.streaming.Pipeline.tempRoot("orc")
     val df = Seq(
       (1L, "a", 1.5, java.sql.Timestamp.valueOf("2025-01-01 10:00:00")),
       (2L, "b", 2.5, java.sql.Timestamp.valueOf("2025-01-01 11:00:00")))

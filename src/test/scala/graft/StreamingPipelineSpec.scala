@@ -574,4 +574,31 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(spark.conf.get(key) === before,
       "session shuffle-partition count must be restored after both drains")
   }
+
+  test("a fixed-point loop and a drain run on two threads of one session: " +
+      "both equal their oracles and the session conf is unchanged after") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val before = spark.conf.getAll
+    // x251 kCore at k=2 on a triangle plus a pendant: d peels in round 1
+    val graph = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d")
+      .toDF("s", "d").repartition(3)
+    // the s08 drain: distinct keys through a watermarked dedup stream
+    val events = (0 until 40).map(i =>
+      (i % 7L, s"k${i % 5}", ts(s"2025-01-01 10:${10 + i}:00")))
+      .toDF("user_id", "event_type", "ts")
+    val loop = Future(graft.analytics.Graph.kCore(graph, col("s"), col("d"), 2)
+      .collect().map(r => r.getString(0) -> (r.getBoolean(1), Option(r.get(2)))).toMap)
+    val drain = Future(Pipeline.dedupDrainParity(spark, events, eventTimeCol = "ts",
+        keys = Seq("user_id", "event_type"), watermark = "60 days")
+      .as[(Long, String)].collect().toSet)
+    val core = Await.result(loop, 10.minutes)
+    val keys = Await.result(drain, 10.minutes)
+    assert(core === Map("a" -> (true, None), "b" -> (true, None),
+      "c" -> (true, None), "d" -> (false, Some(1))))
+    assert(keys === events.select("user_id", "event_type").as[(Long, String)]
+      .collect().toSet)
+    assert(spark.conf.getAll === before)
+  }
 }

@@ -111,7 +111,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("compact rewrites a small-files directory into few files, rows intact") {
     import graft.warehouse.Layout
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toFile
+    val dir = new java.io.File(Pipeline.tempRoot("compact"))
     val path = new java.io.File(dir, "t").getAbsolutePath
     // a streaming sink's worth of fragments: 40 files for ~3 MiB of data
       val df = spark.range(120000)
@@ -174,7 +174,7 @@ class WarehouseSpec extends SparkSpec {
   test("x218 on files: footer stats of the z-order compaction prune a " +
       "value band the round-robin layout cannot") {
     import graft.warehouse.Layout
-    val dir = java.nio.file.Files.createTempDirectory("graft_footer").toFile
+    val dir = new java.io.File(Pipeline.tempRoot("footer"))
     val path = new java.io.File(dir, "t").getAbsolutePath
     // enough data for ~12 one-MiB files: with a dozen contiguous
     // z-ranges the interleave's x-bits are genuinely constrained per
