@@ -195,18 +195,17 @@ object SparkEntry {
         .otherwise(lit("zz"))))
   }
 
-  /** s12/s15's shared drain input: the 5-column events projection both
-    * stream-stream join drains replay, materialized ONCE per sf dir in
-    * exactly 2 part files (= 2 micro-batches under maxFilesPerTrigger=1,
-    * so state still crosses a batch boundary). The round-10/12 verdicts
-    * flagged that each drain rebuilt this identical write stage; sharing
-    * it prices the drains on their actual stateful work. s12 streams the
-    * fixture read-only; s15 copies the part files into a private dir
-    * before renaming its sentinel in, so the fixture is never mutated.
+  /** The shared bulk drain input of s08, s12 and s13: the 5-column
+    * events projection, materialized ONCE per sf dir as 2 part files by
+    * the drains' own bulk stager (= 2 micro-batches, so state still
+    * crosses a batch boundary). Sharing it prices the drains on their
+    * stateful work, not on rebuilding an identical write stage; each
+    * drain streams it read-only. The sentinel'd drains (s09/s17, s11,
+    * s15) and s10's ordered slices have fixtures of their own.
     */
   private def drainInputFixture(s: SparkSession, dir: String): String =
-    materializeFixture(s, "drain_events", dir) {
-      drainEventsFrame(s, dir).repartition(2)
+    materializeStagedFixture(s, "drain_events", dir) {
+      graft.streaming.Pipeline.stageBulkInput(drainEventsFrame(s, dir), _, 2)
     }
 
   /** The 5-column events projection every file-source drain streams —
@@ -904,8 +903,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sum_value"))
     }),
     "s06_partitioned_parquet" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_s06_parquet_" +
-        Integer.toHexString(dir.hashCode)
+      val path = graft.streaming.Pipeline.tempRoot("s06_parquet")
       Sources.writePartitionedParquet(
         T(s, dir, "events").select(col("event_id"), col("event_type"),
           col("user_id"), col("value")),
@@ -918,8 +916,7 @@ object SparkEntry {
           countDistinct(col("user_id")).as("users"))
     }),
     "s05_csv_roundtrip" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_s05_csv_" +
-        Integer.toHexString(dir.hashCode)
+      val path = graft.streaming.Pipeline.tempRoot("s05_csv")
       val ev = T(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
       Sources.writeCsv(ev, path)
@@ -937,8 +934,7 @@ object SparkEntry {
     // ORC interchange roundtrip (schema travels in the file) — the s05
     // identity-through-the-format proof shape for the Hive/Trino handoff
     "s08_orc_roundtrip" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_s08_orc_" +
-        Integer.toHexString(dir.hashCode)
+      val path = graft.streaming.Pipeline.tempRoot("s08_orc")
       val ev = T(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
       Sources.writeOrc(ev, path)
@@ -955,19 +951,17 @@ object SparkEntry {
           Dedup.nearDuplicates(docs, col("doc_id"), col("text"), threshold = 0.3))
         .select(col("doc_id"))
     }),
-    // JSONL interchange roundtrip (schema-on-read, no inference pass) —
-    // same identity-through-the-format proof shape as s05
     // T2/T3/T4 with a DuckDB oracle: events re-read as a bounded stream
-    // (4 files, maxFilesPerTrigger=1 → dedup state carries across ≥4
+    // (2 files, maxFilesPerTrigger=1 → dedup state carries across ≥2
     // micro-batches), watermarked dropDuplicates into the checkpointed
     // parquet sink, AvailableNow drain, sink read back. Output = the
     // dedup-key SET (survivor-invariant), watermark (60 d) > the events
     // span (30 d) so nothing evicts mid-run and the result is exactly
     // SELECT DISTINCT user_id, event_type — the statement the oracle makes
     "s08_stream_parity" -> ((s, dir) =>
-      // shared staged input (the s12/s15 fixture discipline): the key
-      // set only reads ts + the key columns, so the 5-col drain frame
-      // is the same distinct-keys oracle statement
+      // shared bulk fixture (with s12/s13): the key set only reads ts +
+      // the key columns, so the 5-col drain frame is the same
+      // distinct-keys oracle statement
       graft.streaming.Pipeline.dedupDrainParity(s, drainEventsFrame(s, dir),
         eventTimeCol = "ts", keys = Seq("user_id", "event_type"),
         watermark = "60 days",
@@ -1092,9 +1086,9 @@ object SparkEntry {
       graft.streaming.Pipeline.contentDedupDrainParity(s, corpus,
         textCol = "text", eventTimeCol = "ts", watermark = "60 days",
         // build-once bulk fixture (no sentinel — the key set drains by
-        // exhaustion); read untouched, the s12 discipline
-        preparedIn = Some(materializeFixture(s, "drain_homoglyph", dir) {
-          corpus.repartition(2)
+        // exhaustion), staged by the drains' own bulk stager
+        preparedIn = Some(materializeStagedFixture(s, "drain_homoglyph", dir) {
+          graft.streaming.Pipeline.stageBulkInput(corpus, _, 2)
         }))
     }),
     // stream-static broadcast enrichment drained under the oracle: the
@@ -1121,11 +1115,10 @@ object SparkEntry {
         preparedIn = Some(drainInputFixture(s, dir)))
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"), col("event_type"), col("value"))),
+    // JSONL interchange roundtrip (schema-on-read, no inference pass) —
+    // same identity-through-the-format proof shape as s05
     "s07_jsonl_roundtrip" -> ((s, dir) => {
-      // suffix the sink path with a hash of the data dir so two concurrent
-      // harness runs on the same machine never overwrite each other
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_s07_jsonl_" +
-        Integer.toHexString(dir.hashCode)
+      val path = graft.streaming.Pipeline.tempRoot("s07_jsonl")
       val ev = T(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
       Sources.writeJsonl(ev, path)

@@ -95,33 +95,15 @@ object Ewma {
       }
   }
 
-  /** T6's stateful streaming EWMA exercised end-to-end as an
-    * ORACLE-CHECKABLE drain (the s08/s09 pattern, lifted to
-    * order-sensitive state). Unlike dedup (order-free) and windows
-    * (watermark-flushed), the EWMA fold depends on EVENT ORDER across
-    * micro-batches, so the input files must replay in time order: the
-    * batch is sliced at exact percentile boundaries of the event time and
-    * each slice is written in its own sequential job — ascending file
-    * modification times, the order the file source replays under
-    * `maxFilesPerTrigger = 1`. Within a slice, [[streaming]]'s per-batch
-    * sort handles row order; across slices the carried state does. The
-    * drained sink then equals the batch recursive filter row for row
-    * (`0.35·new + 0.65·prev`), which a DuckDB recursive CTE can restate —
-    * the statement the oracle checks. The parity rounds at 3 decimals
-    * (one past the data's 2): the two engines' 60-odd-step double folds
-    * drift by ULPs (measured ~5e-11), and a 6-decimal rounding puts ~1 in
-    * 10⁴ rows on a tie boundary where the engines round apart; at 1e-3
-    * units the collision odds are ~1e-7 per row.
-    */
-  /** The time-ordered staged input of [[drainParity]], exposed for the
-    * build-once fixture path (the s12/s15 shared-input discipline): the
-    * batch is sliced at exact percentile boundaries of the event time and
-    * each slice written in its own sequential job into `in` under an
-    * index-ordered name — ascending in BOTH path and mtime, so the file
-    * source replays slices in time order whichever it sorts by (UUID
-    * part names in one dir do not guarantee that — observed reorders).
-    * coalesce(1) is harness-fidelity, not a 100 TB shape: production
-    * ordered replay is a Kafka partition, not a file queue.
+  /** The time-ordered staged input of [[drainParity]], also the
+    * build-once fixture builder: the batch is sliced at exact percentile
+    * boundaries of the event time and each slice written in its own
+    * sequential job into `in` under an index-ordered name — ascending in
+    * BOTH path and mtime, so the file source replays slices in time order
+    * whichever it sorts by (UUID part names in one dir do not guarantee
+    * that — observed reorders). coalesce(1) is harness-fidelity, not a
+    * 100 TB shape: production ordered replay is a Kafka partition, not a
+    * file queue.
     */
   def stageOrderedInput(spark: SparkSession, batch: DataFrame,
       in: String, inputFiles: Int = 2): Unit = {
@@ -159,27 +141,30 @@ object Ewma {
       col("station_id").cast("string").as("station_id"),
       col("timestamp"), col("value").cast("double").as("value"))
 
+  /** T6's stateful streaming EWMA exercised end-to-end as an
+    * ORACLE-CHECKABLE drain (the s08/s09 pattern, lifted to
+    * order-sensitive state). Unlike dedup (order-free) and windows
+    * (watermark-flushed), the EWMA fold depends on EVENT ORDER across
+    * micro-batches, so the input files must replay in time order
+    * ([[stageOrderedInput]]). Within a slice, [[streaming]]'s per-batch
+    * sort handles row order; across slices the carried state does. The
+    * drained sink then equals the batch recursive filter row for row
+    * (`0.35·new + 0.65·prev`), which a DuckDB recursive CTE can restate —
+    * the statement the oracle checks. The parity rounds at 3 decimals
+    * (one past the data's 2): the two engines' 60-odd-step double folds
+    * drift by ULPs (measured ~5e-11), and a 6-decimal rounding puts ~1 in
+    * 10⁴ rows on a tie boundary where the engines round apart; at 1e-3
+    * units the collision odds are ~1e-7 per row.
+    */
   def drainParity(spark: SparkSession, batch: DataFrame,
       alpha: Double = 0.35, inputFiles: Int = 2,
-      preparedIn: Option[String] = None): DataFrame =
-      Pipeline.withDrainPartitions(spark) {
+      preparedIn: Option[String] = None): DataFrame = {
     import spark.implicits._
-    require(inputFiles >= 2,
-      s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = Pipeline.tempRoot("s10")
-    // preparedIn: a fully staged time-ordered dir ([[stageOrderedInput]],
-    // build-once fixture); read untouched. Checkpoint/sink stay fresh.
-    val in = preparedIn.getOrElse {
-      val p = s"$root/in"
-      stageOrderedInput(spark, batch, p, inputFiles)
-      p
+    Pipeline.drain(spark, "s10", shape(batch).schema, inputFiles, preparedIn)(
+        stageOrderedInput(spark, batch, _, inputFiles)) { (stream, root) =>
+      Pipeline.drainToParquet(streaming(spark, stream.as[Reading], alpha)
+        .select(col("station_id"), unix_micros(col("timestamp")).as("ts_us"),
+          col("value"), round(col("ewma"), 3).as("ewma")), root)
     }
-    val shaped = shape(batch)
-    val stream = spark.readStream.schema(shaped.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in).as[Reading]
-    val smoothed = streaming(spark, stream, alpha)
-      .select(col("station_id"), unix_micros(col("timestamp")).as("ts_us"),
-        col("value"), round(col("ewma"), 3).as("ewma"))
-    Pipeline.drainToParquet(smoothed, root)
   }
 }

@@ -2,10 +2,11 @@ package graft.streaming
 
 import graft.clean.Validation
 import graft.features.Features
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.StructType
 
 /** The reference's streaming ETL (SURVEY.md §3.1): stream →
   * parse/validate/clean → feature-engineer → checkpointed parquet sink.
@@ -20,8 +21,9 @@ import org.apache.spark.sql.Row
   * [[LocalCheckpointFileManager]] so that a `file:` checkpoint's per-trigger
   * writes fork no process. On disk that drops Hadoop's hidden `.crc`
   * sidecars and keeps Spark's own state-store checksums (see [[sink]]).
-  * The drains wait with a fixed bound ([[awaitDrain]]) and work in temp
-  * roots deleted at JVM exit ([[tempRoot]]).
+  * The oracle-checked drains share one lifecycle ([[drain]]): they wait
+  * with a fixed bound ([[awaitDrain]]) and work in temp roots deleted at
+  * JVM exit ([[tempRoot]]).
   */
 object Pipeline {
 
@@ -264,6 +266,83 @@ object Pipeline {
       else w,
       df.sparkSession)
 
+  /** The one lifecycle of every oracle-checked drain (s08–s17, including
+    * [[Ewma.drainParity]]). A drain supplies its tag, its `stage` (which
+    * writes the input into a directory) and its `body`; this runs the rest:
+    * pin the state partitions ([[withDrainPartitions]]), require
+    * `inputFiles >= 2`, take a fresh [[tempRoot]], stage into `root/in`
+    * unless the caller passes `preparedIn`, require >= 2 bulk files there,
+    * and hand `body` the input as a bounded file stream
+    * (`maxFilesPerTrigger = 1`, one bulk file per micro-batch, so state
+    * crosses at least one batch boundary) plus `root` for its checkpoint
+    * and sink. `body` returns the drain's result frame.
+    *
+    * `preparedIn` is a FULLY staged directory (bulk plus any sentinel),
+    * the build-once fixture path: it stands for the previous stage's
+    * persisted output that a production drain consumes, so a harness run
+    * prices the drain, not the re-staging of its source. The stream reads
+    * it untouched, so one fixture is shared by drains and runs; checkpoint
+    * and sink stay fresh per run, so every run is the FULL cold pipeline.
+    * Bulk files are `part-*` (a DataFrame write) or `slice-*` (EWMA's
+    * ordered slices). The `zzz-sentinel.parquet` horizon row is not
+    * counted: a prepared dir of one bulk file plus a sentinel would drain
+    * its data in one micro-batch and leave the carry untested.
+    */
+  private[streaming] def drain(spark: SparkSession, tag: String,
+      schema: StructType, inputFiles: Int, preparedIn: Option[String])(
+      stage: String => Unit)(body: (DataFrame, String) => DataFrame): DataFrame =
+    withDrainPartitions(spark) {
+      require(inputFiles >= 2,
+        s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
+      val root = tempRoot(tag)
+      val in = preparedIn.getOrElse { stage(s"$root/in"); s"$root/in" }
+      val bulk = new Path(in).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .globStatus(new Path(s"$in/{part,slice}-*")).length
+      require(bulk >= 2,
+        s"prepared input must span >= 2 files for cross-batch state: $in")
+      body(spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .parquet(in), root)
+    }
+
+  /** The bulk layout of every drain input: `batchDf` as `inputFiles`
+    * parquet part files in `in`, one micro-batch each under [[drain]]. */
+  private[graft] def stageBulkInput(batchDf: DataFrame, in: String,
+      inputFiles: Int): Unit =
+    batchDf.repartition(inputFiles).write.mode("overwrite").parquet(in)
+
+  /** [[stageBulkInput]], then the horizon SENTINEL: one row per element
+    * of `rows`, shaped as `batchDf`, whose columns take `sentinel`'s
+    * expressions (over `__mx`, the batch's max event time, and `__row`,
+    * the element) and are null elsewhere. It is the "close the books"
+    * event that pushes the watermark past every real window, session or
+    * match window in the terminal no-data batch.
+    *
+    * The sentinel must replay LAST. A plain append would give it a UUID
+    * part name interleaving arbitrarily with the bulk files under a
+    * path-ordered listing (observed reorders in the s10 EWMA drain), so
+    * write it aside and MOVE it in under a name that sorts last — last
+    * in both path and mtime order, whichever the file source uses.
+    * (Bulk files may replay in any order: the span watermark drops
+    * nothing; only the sentinel's position matters.) The scratch dir is a
+    * SIBLING of `in`, so a directory-level publish of `in` carries
+    * nothing extra.
+    */
+  private def stageWithSentinel(spark: SparkSession, batchDf: DataFrame,
+      eventTimeCol: String, in: String, inputFiles: Int,
+      sentinel: Map[String, Column], rows: Column = array(lit(0))): Unit = {
+    stageBulkInput(batchDf, in, inputFiles)
+    val aside = s"${in}__sentinel"
+    batchDf.agg(max(col(eventTimeCol)).as("__mx"))
+      .select(col("__mx"), explode(rows).as("__row"))
+      .select(batchDf.schema.fields.map(f =>
+        sentinel.getOrElse(f.name, lit(null)).cast(f.dataType).as(f.name)): _*)
+      .coalesce(1).write.mode("overwrite").parquet(aside)
+    val fs = new Path(in).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.rename(fs.globStatus(new Path(s"$aside/part-*")).head.getPath,
+      new Path(s"$in/zzz-sentinel.parquet"))
+    fs.delete(new Path(aside), true)
+  }
+
   /** T2/T3/T4 exercised end-to-end as an ORACLE-CHECKABLE batch query:
     * materialize `batchDf` as `inputFiles` parquet files, re-read them as
     * a bounded STREAM (`maxFilesPerTrigger = 1`, so the run crosses
@@ -279,9 +358,8 @@ object Pipeline {
     * the result equals exactly `SELECT DISTINCT keys FROM batch` (the
     * DuckDB-checkable statement; with a shorter horizon, keys whose
     * duplicates straddle an eviction would re-emit — real streaming
-    * semantics, but not a batch-expressible oracle). Every run uses a
-    * fresh input/checkpoint/sink directory, so each invocation times the
-    * FULL cold pipeline (no checkpoint reuse masquerading as work).
+    * semantics, but not a batch-expressible oracle). No sentinel: the
+    * key set drains by input exhaustion.
     *
     * `inputFiles` defaults to the MINIMUM (2) that still forces state
     * across a batch boundary: drain cost is ~all trigger machinery (state
@@ -292,27 +370,13 @@ object Pipeline {
   def dedupDrainParity(spark: org.apache.spark.sql.SparkSession,
       batchDf: DataFrame, eventTimeCol: String, keys: Seq[String],
       watermark: String, inputFiles: Int = 2,
-      preparedIn: Option[String] = None): DataFrame =
-      withDrainPartitions(spark) {
+      preparedIn: Option[String] = None): DataFrame = {
     require(keys.nonEmpty, "dedup needs at least one key column")
-    require(inputFiles >= 2,
-      s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = tempRoot("s08")
-    // no sentinel here (the key set drains by input exhaustion), so a
-    // shared bulk fixture is read untouched — the s12 discipline
-    val in = preparedIn.getOrElse {
-      val p = s"$root/in"
-      batchDf.repartition(inputFiles).write.mode("overwrite").parquet(p)
-      p
+    drain(spark, "s08", batchDf.schema, inputFiles, preparedIn)(
+        stageBulkInput(batchDf, _, inputFiles)) { (stream, root) =>
+      drainToParquet(stream.withWatermark(eventTimeCol, watermark)
+        .dropDuplicates(keys).select(keys.map(col): _*), root)
     }
-    require(partFileCount(spark, in) >= 2,
-      s"prepared input must span >= 2 files for cross-batch state: $in")
-    val stream = spark.readStream.schema(batchDf.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .withWatermark(eventTimeCol, watermark)
-      .dropDuplicates(keys)
-      .select(keys.map(col): _*)
-    drainToParquet(stream, root)
   }
 
   /** s16: [[contentDedup]]'s homoglyph-safe rung through a REAL
@@ -336,27 +400,13 @@ object Pipeline {
       batchDf: DataFrame, textCol: String, eventTimeCol: String,
       watermark: String, inputFiles: Int = 2,
       preparedIn: Option[String] = None): DataFrame =
-      withDrainPartitions(spark) {
-    require(inputFiles >= 2,
-      s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = tempRoot("s16")
-    // no sentinel (skeleton-key set drains by exhaustion): a shared bulk
-    // fixture is read untouched — the s12 discipline
-    val in = preparedIn.getOrElse {
-      val p = s"$root/in"
-      batchDf.repartition(inputFiles).write.mode("overwrite").parquet(p)
-      p
+    drain(spark, "s16", batchDf.schema, inputFiles, preparedIn)(
+        stageBulkInput(batchDf, _, inputFiles)) { (stream, root) =>
+      drainToParquet(contentDedup(stream, col(textCol), eventTimeCol,
+          watermark, homoglyphSafe = true)
+        .select(graft.text.TextAnalysis.fingerprint(
+          graft.text.Confusables.skeleton(col(textCol))).as("sk_fp")), root)
     }
-    require(partFileCount(spark, in) >= 2,
-      s"prepared input must span >= 2 files for cross-batch state: $in")
-    val stream = spark.readStream.schema(batchDf.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val survivors = contentDedup(stream, col(textCol), eventTimeCol,
-      watermark, homoglyphSafe = true)
-      .select(graft.text.TextAnalysis.fingerprint(
-        graft.text.Confusables.skeleton(col(textCol))).as("sk_fp"))
-    drainToParquet(survivors, root)
-  }
 
   /** T5's streaming tumbling-window aggregation exercised end-to-end as an
     * ORACLE-CHECKABLE drain (the [[dedupDrainParity]] pattern, lifted to
@@ -368,44 +418,32 @@ object Pipeline {
     * Append mode only emits a window once the watermark passes its end —
     * with a span-length delay nothing would ever emit, with a `0 seconds`
     * delay out-of-order FILES would drop each other's rows. Both are
-    * solved by a SENTINEL row: the bulk files carry a `delay` (> the
-    * data's event-time span) watermark so no real row is ever late no
-    * matter how the source orders the files, and one final single-row file
-    * at `max(ts) + delay + 2·width` (written last, so the
-    * modification-time-ordered file source processes it last) pushes the
-    * watermark past every real window's end in the terminal no-data batch
-    * — every real window emits, the sentinel's own window (and its
-    * null-key group) stays in state and is discarded with the drain. The
-    * sink then equals exactly the BATCH tumbling aggregate — the
-    * DuckDB-checkable statement. This is also the production shape for
-    * "close the books at end of day": a horizon event, not a restart.
+    * solved by a SENTINEL row ([[stageWindowDrainInput]]): the bulk files
+    * carry a `delay` (> the data's event-time span) watermark so no real
+    * row is ever late no matter how the source orders the files, and one
+    * final single-row file at `max(ts) + delay + 2·width`, replayed last,
+    * pushes the watermark past every real window's end in the terminal
+    * no-data batch — every real window emits, the sentinel's own window
+    * (and its null-key group) stays in state and is discarded with the
+    * drain. The sink then equals exactly the BATCH tumbling aggregate —
+    * the DuckDB-checkable statement. This is also the production shape
+    * for "close the books at end of day": a horizon event, not a restart.
     */
   def windowDrainParity(spark: org.apache.spark.sql.SparkSession,
       batchDf: DataFrame, eventTimeCol: String, keyCol: String,
       valueCol: String, width: String, delay: String,
       inputFiles: Int = 2,
-      preparedIn: Option[String] = None): DataFrame = withDrainPartitions(spark) {
-    require(inputFiles >= 2,
-      s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = tempRoot("s09")
-    // preparedIn: a FULLY staged dir (bulk + sentinel, built by
-    // stageWindowDrainInput) — the fixture path; read untouched, so it
-    // stays shareable. Checkpoint and sink stay fresh per run either way.
-    val in = preparedIn.getOrElse(stageDrainInput(spark, batchDf,
-      eventTimeCol, col("__mx") + expr(s"INTERVAL '$delay'") +
-        expr(s"2 * INTERVAL '$width'"), root, inputFiles))
-    require(partFileCount(spark, in) >= 2,
-      s"prepared input must span >= 2 files for cross-batch state: $in")
-    val stream = spark.readStream.schema(batchDf.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .withWatermark(eventTimeCol, delay)
-      .groupBy(window(col(eventTimeCol), width), col(keyCol))
-      .agg(count(lit(1)).as("cnt"),
-        round(sum(col(valueCol)), 2).as("sum_value"))
-      .select(unix_timestamp(col("window.start")).as("ws"), col(keyCol),
-        col("cnt"), col("sum_value"))
-    drainToParquet(stream, root)
-  }
+      preparedIn: Option[String] = None): DataFrame =
+    drain(spark, "s09", batchDf.schema, inputFiles, preparedIn)(
+        stageWindowDrainInput(spark, batchDf, eventTimeCol, width, delay, _,
+          inputFiles)) { (stream, root) =>
+      drainToParquet(stream.withWatermark(eventTimeCol, delay)
+        .groupBy(window(col(eventTimeCol), width), col(keyCol))
+        .agg(count(lit(1)).as("cnt"),
+          round(sum(col(valueCol)), 2).as("sum_value"))
+        .select(unix_timestamp(col("window.start")).as("ws"), col(keyCol),
+          col("cnt"), col("sum_value")), root)
+    }
 
   /** s17: the CUSTOM typed-imperative aggregate under streaming state —
     * [[windowDrainParity]]'s shape with the per-window aggregate swapped
@@ -421,89 +459,29 @@ object Pipeline {
     * item count, so no decrement ever fires and the drained summaries
     * are EXACT per-window counts — the DuckDB-checkable statement (the
     * approximation bound under eviction stays spec-tested, as for a23).
-    * Same sentinel/watermark discipline as the windowed drain.
+    * Same sentinel/watermark discipline as the windowed drain, staged by
+    * the same [[stageWindowDrainInput]].
     */
   def heavyHitterDrainParity(spark: org.apache.spark.sql.SparkSession,
       batchDf: DataFrame, eventTimeCol: String, itemCol: String,
       capacity: Int, width: String, delay: String,
       inputFiles: Int = 2,
-      preparedIn: Option[String] = None): DataFrame = withDrainPartitions(spark) {
-    require(inputFiles >= 2,
-      s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = tempRoot("s17")
-    // preparedIn: fully staged (stageWindowDrainInput — same sentinel
-    // formula as the windowed drain); read untouched
-    val in = preparedIn.getOrElse(stageDrainInput(spark, batchDf,
-      eventTimeCol, col("__mx") + expr(s"INTERVAL '$delay'") +
-        expr(s"2 * INTERVAL '$width'"), root, inputFiles))
-    require(partFileCount(spark, in) >= 2,
-      s"prepared input must span >= 2 files for cross-batch state: $in")
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val mg = graft.plans.MisraGries(
-      ColumnBridge.expression(col(itemCol)), capacity)
-    val stream = spark.readStream.schema(batchDf.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .withWatermark(eventTimeCol, delay)
-      .groupBy(window(col(eventTimeCol), width))
-      .agg(ColumnBridge.column(mg.toAggregateExpression()).as("__hh"))
-      .select(unix_timestamp(col("window.start")).as("ws"), col("__hh"))
-    drainToParquet(stream, root)
-      .select(col("ws"), explode(col("__hh")).as("e"))
-      .select(col("ws"), col("e.item").as("item"),
-        col("e.est_count").as("est_count"))
-  }
-
-  /** Materialize `batchDf` as `inputFiles` bulk parquet files plus ONE
-    * sentinel row whose event time is `sentinelTs` (an expression over
-    * `__mx` = the batch's max event time), staged so the sentinel replays
-    * LAST. Shared by the windowed/session drains: the sentinel is the
-    * "close the books" horizon event that pushes the watermark past every
-    * real window/session end in the terminal no-data batch.
-    *
-    * The sentinel must replay LAST. A plain append would give it a UUID
-    * part name interleaving arbitrarily with the bulk files under a
-    * path-ordered listing (observed reorders in the s10 EWMA drain), so
-    * write it aside and MOVE it in under a name that sorts last — last
-    * in both path and mtime order, whichever the file source uses.
-    * (Bulk files may replay in any order: the span watermark drops
-    * nothing; only the sentinel's position matters.)
-    */
-  private def stageDrainInput(spark: org.apache.spark.sql.SparkSession,
-      batchDf: DataFrame, eventTimeCol: String, sentinelTs: org.apache.spark.sql.Column,
-      root: String, inputFiles: Int): String = {
-    val in = s"$root/in"
-    stageDrainInputTo(spark, batchDf, eventTimeCol, sentinelTs, in, inputFiles)
-    in
-  }
-
-  /** [[stageDrainInput]] writing into a caller-chosen directory — the
-    * entry point the build-once input FIXTURES use (the s12/s15 shared
-    * drain-input discipline, extended round 14 to the sentinel'd drains):
-    * the staged dir is the previous stage's persisted output a production
-    * drain consumes, so a harness invocation prices the drain lifecycle,
-    * not the re-staging of its source files. The sentinel scratch dir is
-    * a SIBLING of `in` so a directory-level publish of `in` carries
-    * nothing extra.
-    */
-  private[graft] def stageDrainInputTo(spark: org.apache.spark.sql.SparkSession,
-      batchDf: DataFrame, eventTimeCol: String,
-      sentinelTs: org.apache.spark.sql.Column, in: String,
-      inputFiles: Int): Unit = {
-    batchDf.repartition(inputFiles).write.mode("overwrite").parquet(in)
-    val sentinel = batchDf
-      .agg(max(col(eventTimeCol)).as("__mx"))
-      .select(batchDf.schema.fields.map { f =>
-        if (f.name == eventTimeCol) sentinelTs.cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-    sentinel.coalesce(1).write.mode("overwrite").parquet(s"${in}__sentinel")
-    val inPath = new org.apache.hadoop.fs.Path(in)
-    val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val part = fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"${in}__sentinel/part-*")).head.getPath
-    fs.rename(part, new org.apache.hadoop.fs.Path(s"$in/zzz-sentinel.parquet"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"${in}__sentinel"), true)
-  }
+      preparedIn: Option[String] = None): DataFrame =
+    drain(spark, "s17", batchDf.schema, inputFiles, preparedIn)(
+        stageWindowDrainInput(spark, batchDf, eventTimeCol, width, delay, _,
+          inputFiles)) { (stream, root) =>
+      import org.apache.spark.sql.graftbridge.ColumnBridge
+      val mg = graft.plans.MisraGries(
+        ColumnBridge.expression(col(itemCol)), capacity)
+      drainToParquet(stream.withWatermark(eventTimeCol, delay)
+          .groupBy(window(col(eventTimeCol), width))
+          .agg(ColumnBridge.column(mg.toAggregateExpression()).as("__hh"))
+          .select(unix_timestamp(col("window.start")).as("ws"), col("__hh")),
+          root)
+        .select(col("ws"), explode(col("__hh")).as("e"))
+        .select(col("ws"), col("e.item").as("item"),
+          col("e.est_count").as("est_count"))
+    }
 
   /** [[outerJoinDrainParity]]'s staged input: bulk files plus TWO
     * sentinel rows — one passes each side's filter — at
@@ -516,28 +494,12 @@ object Pipeline {
       batchDf: DataFrame, eventTimeCol: String, idCol: String, key: String,
       sideCol: String, leftSide: String, rightSide: String,
       lookback: String, delay: String, in: String,
-      inputFiles: Int = 2): Unit = {
-    batchDf.repartition(inputFiles).write.mode("overwrite").parquet(in)
-    val sentinelTs = col("__mx") + expr(s"INTERVAL $delay") +
-      expr(s"2 * INTERVAL $lookback")
-    val sentinel = batchDf.agg(max(col(eventTimeCol)).as("__mx"))
-      .select(explode(array(lit(leftSide), lit(rightSide))).as("__side"),
-        col("__mx"))
-      .select(batchDf.schema.fields.map { f =>
-        if (f.name == eventTimeCol) sentinelTs.cast(f.dataType).as(f.name)
-        else if (f.name == sideCol) col("__side").cast(f.dataType).as(f.name)
-        else if (f.name == key || f.name == idCol)
-          lit(-1L).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-    sentinel.coalesce(1).write.mode("overwrite").parquet(s"${in}__sentinel")
-    val inPath = new org.apache.hadoop.fs.Path(in)
-    val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val part = fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"${in}__sentinel/part-*")).head.getPath
-    fs.rename(part, new org.apache.hadoop.fs.Path(s"$in/zzz-sentinel.parquet"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"${in}__sentinel"), true)
-  }
+      inputFiles: Int = 2): Unit =
+    stageWithSentinel(spark, batchDf, eventTimeCol, in, inputFiles,
+      Map(idCol -> lit(-1L), key -> lit(-1L), sideCol -> col("__row"),
+        eventTimeCol -> (col("__mx") + expr(s"INTERVAL $delay") +
+          expr(s"2 * INTERVAL $lookback"))),
+      rows = array(lit(leftSide), lit(rightSide)))
 
   /** Fully-staged input (bulk + horizon sentinel) for a
     * [[windowDrainParity]]/[[heavyHitterDrainParity]] drain — ONE
@@ -547,19 +509,20 @@ object Pipeline {
   def stageWindowDrainInput(spark: org.apache.spark.sql.SparkSession,
       batchDf: DataFrame, eventTimeCol: String, width: String,
       delay: String, in: String, inputFiles: Int = 2): Unit =
-    stageDrainInputTo(spark, batchDf, eventTimeCol,
-      col("__mx") + expr(s"INTERVAL '$delay'") +
-        expr(s"2 * INTERVAL '$width'"), in, inputFiles)
+    stageWithSentinel(spark, batchDf, eventTimeCol, in, inputFiles,
+      Map(eventTimeCol -> (col("__mx") + expr(s"INTERVAL '$delay'") +
+        expr(s"2 * INTERVAL '$width'"))))
 
   /** [[sessionDrainParity]]'s staged input — sentinel at
-    * `max(ts) + delay + 2·gap` (see that method's contract).
+    * `max(ts) + delay + 2·gap` (see that method's contract); one
+    * definition shared by the inline path and the fixture builder.
     */
   def stageSessionDrainInput(spark: org.apache.spark.sql.SparkSession,
       batchDf: DataFrame, eventTimeCol: String, gapSeconds: Long,
       delay: String, in: String, inputFiles: Int = 2): Unit =
-    stageDrainInputTo(spark, batchDf, eventTimeCol,
-      col("__mx") + expr(s"INTERVAL '$delay'") +
-        expr(s"INTERVAL '${2 * gapSeconds} seconds'"), in, inputFiles)
+    stageWithSentinel(spark, batchDf, eventTimeCol, in, inputFiles,
+      Map(eventTimeCol -> (col("__mx") + expr(s"INTERVAL '$delay'") +
+        expr(s"INTERVAL '${2 * gapSeconds} seconds'"))))
 
   /** T5's SESSION-window aggregation exercised end-to-end as an
     * ORACLE-CHECKABLE drain — the 4th distinct stateful shape under the
@@ -588,28 +551,20 @@ object Pipeline {
       batchDf: DataFrame, eventTimeCol: String, keyCol: String,
       valueCol: String, gapSeconds: Long, delay: String,
       inputFiles: Int = 2,
-      preparedIn: Option[String] = None): DataFrame = withDrainPartitions(spark) {
+      preparedIn: Option[String] = None): DataFrame = {
     require(gapSeconds > 0, s"gapSeconds must be positive, got $gapSeconds")
-    require(inputFiles >= 2,
-      s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = tempRoot("s11")
-    // preparedIn: fully staged (stageSessionDrainInput); read untouched
-    val in = preparedIn.getOrElse(stageDrainInput(spark, batchDf,
-      eventTimeCol, col("__mx") + expr(s"INTERVAL '$delay'") +
-        expr(s"INTERVAL '${2 * gapSeconds} seconds'"), root, inputFiles))
-    require(partFileCount(spark, in) >= 2,
-      s"prepared input must span >= 2 files for cross-batch state: $in")
-    val stream = spark.readStream.schema(batchDf.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .withWatermark(eventTimeCol, delay)
-      .groupBy(col(keyCol),
-        session_window(col(eventTimeCol), s"$gapSeconds seconds").as("sw"))
-      .agg(count(lit(1)).as("cnt"),
-        round(sum(col(valueCol)), 2).as("sum_value"))
-      .select(col(keyCol), unix_micros(col("sw.start")).as("session_start_us"),
-        unix_micros(col("sw.end")).as("session_end_us"), col("cnt"),
-        col("sum_value"))
-    drainToParquet(stream, root)
+    drain(spark, "s11", batchDf.schema, inputFiles, preparedIn)(
+        stageSessionDrainInput(spark, batchDf, eventTimeCol, gapSeconds,
+          delay, _, inputFiles)) { (stream, root) =>
+      drainToParquet(stream.withWatermark(eventTimeCol, delay)
+        .groupBy(col(keyCol),
+          session_window(col(eventTimeCol), s"$gapSeconds seconds").as("sw"))
+        .agg(count(lit(1)).as("cnt"),
+          round(sum(col(valueCol)), 2).as("sum_value"))
+        .select(col(keyCol), unix_micros(col("sw.start")).as("session_start_us"),
+          unix_micros(col("sw.end")).as("session_end_us"), col("cnt"),
+          col("sum_value")), root)
+    }
   }
 
   /** STREAM-STREAM interval join exercised end-to-end as an
@@ -631,41 +586,18 @@ object Pipeline {
     * dropped — real streaming semantics, but not a batch-expressible
     * oracle).
     */
-  /** Number of parquet part files under `dir` — the micro-batch count a
-    * `maxFilesPerTrigger = 1` drain will replay from it. */
-  private def partFileCount(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .globStatus(new org.apache.hadoop.fs.Path(s"$dir/part-*")).length
-  }
-
   def joinDrainParity(spark: org.apache.spark.sql.SparkSession,
       batchDf: DataFrame, eventTimeCol: String, key: String,
       leftFilter: org.apache.spark.sql.Column,
       rightFilter: org.apache.spark.sql.Column, lookback: String,
       delay: String, inputFiles: Int = 2,
-      preparedIn: Option[String] = None): DataFrame = withDrainPartitions(spark) {
-    require(inputFiles >= 2,
-      s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = tempRoot("s12")
-    // a caller that drains several joins over the SAME batch frame can
-    // materialize it once (the x123 fixture discipline) and pass the dir;
-    // the stream reads it untouched, so the fixture stays shareable
-    val in = preparedIn.getOrElse {
-      val p = s"$root/in"
-      batchDf.repartition(inputFiles).write.mode("overwrite").parquet(p)
-      p
+      preparedIn: Option[String] = None): DataFrame =
+    drain(spark, "s12", batchDf.schema, inputFiles, preparedIn)(
+        stageBulkInput(batchDf, _, inputFiles)) { (stream, root) =>
+      drainToParquet(intervalJoinStream(stream.filter(leftFilter),
+        stream.filter(rightFilter), key, eventTimeCol, eventTimeCol,
+        lookback, delay), root)
     }
-    require(partFileCount(spark, in) >= 2,
-      s"prepared input must span >= 2 files for cross-batch state: $in")
-    val stream = spark.readStream.schema(batchDf.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val joined = intervalJoinStream(stream.filter(leftFilter),
-      stream.filter(rightFilter), key, eventTimeCol, eventTimeCol,
-      lookback, delay)
-    drainToParquet(joined, root)
-  }
 
   /** Stream-stream LEFT OUTER interval join exercised as an
     * ORACLE-CHECKABLE drain — the 7th distinct stateful shape, and the
@@ -686,32 +618,17 @@ object Pipeline {
       batchDf: DataFrame, eventTimeCol: String, idCol: String, key: String,
       sideCol: String, leftSide: String, rightSide: String,
       lookback: String, delay: String, inputFiles: Int = 2,
-      preparedIn: Option[String] = None): DataFrame = withDrainPartitions(spark) {
-    require(inputFiles >= 2,
-      s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = tempRoot("s15")
-    // preparedIn: a FULLY staged dir (bulk + the two-sided sentinel,
-    // built once by [[stageOuterJoinDrainInput]]) — read untouched, so
-    // the fixture stays shareable; round 14: the per-run part-file copy
-    // + sentinel write this drain used to do moved behind the same
-    // build-once fixture discipline as the bulk input itself.
-    val in = preparedIn.getOrElse {
-      val p = s"$root/in"
-      stageOuterJoinDrainInput(spark, batchDf, eventTimeCol, idCol, key,
-        sideCol, leftSide, rightSide, lookback, delay, p, inputFiles)
-      p
+      preparedIn: Option[String] = None): DataFrame =
+    drain(spark, "s15", batchDf.schema, inputFiles, preparedIn)(
+        stageOuterJoinDrainInput(spark, batchDf, eventTimeCol, idCol, key,
+          sideCol, leftSide, rightSide, lookback, delay, _, inputFiles)) {
+      (stream, root) =>
+        drainToParquet(intervalJoinStream(
+          stream.filter(col(sideCol) === leftSide),
+          stream.filter(col(sideCol) === rightSide),
+          key, eventTimeCol, eventTimeCol, lookback, delay,
+          joinType = "leftOuter"), root).filter(col(key) >= 0)
     }
-    require(partFileCount(spark, in) >= 2,
-      s"prepared input must span >= 2 files for cross-batch state: $in")
-    val stream = spark.readStream.schema(batchDf.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val joined = intervalJoinStream(
-      stream.filter(col(sideCol) === leftSide),
-      stream.filter(col(sideCol) === rightSide),
-      key, eventTimeCol, eventTimeCol, lookback, delay,
-      joinType = "leftOuter")
-    drainToParquet(joined, root).filter(col(key) >= 0)
-  }
 
   /** Stream-STATIC broadcast enrichment exercised as an ORACLE-CHECKABLE
     * drain — the canonical "join the stream to the dimension table"
@@ -725,17 +642,11 @@ object Pipeline {
     */
   def enrichDrainParity(spark: org.apache.spark.sql.SparkSession,
       batchDf: DataFrame, dim: DataFrame, key: String,
-      inputFiles: Int = 2): DataFrame = withDrainPartitions(spark) {
-    require(inputFiles >= 2,
-      s"the stream must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = tempRoot("s14")
-    val in = s"$root/in"
-    batchDf.repartition(inputFiles).write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(batchDf.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .join(broadcast(dim), Seq(key))
-    drainToParquet(stream, root)
-  }
+      inputFiles: Int = 2): DataFrame =
+    drain(spark, "s14", batchDf.schema, inputFiles, None)(
+        stageBulkInput(batchDf, _, inputFiles)) { (stream, root) =>
+      drainToParquet(stream.join(broadcast(dim), Seq(key)), root)
+    }
 
   /** SCD Type-1 upsert sink: `foreachBatch` MERGE of each micro-batch
     * into a versioned parquet table — the "materialized dimension from a
@@ -805,27 +716,15 @@ object Pipeline {
   def upsertDrainParity(spark: org.apache.spark.sql.SparkSession,
       batchDf: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
       inputFiles: Int = 2,
-      preparedIn: Option[String] = None): DataFrame = withDrainPartitions(spark) {
-    require(inputFiles >= 2,
-      s"state must cross a micro-batch boundary: inputFiles >= 2, got $inputFiles")
-    val root = tempRoot("s13")
-    // shared-fixture path (the s12/s15 discipline): the stream reads the
-    // materialized dir untouched
-    val in = preparedIn.getOrElse {
-      val p = s"$root/in"
-      batchDf.repartition(inputFiles).write.mode("overwrite").parquet(p)
-      p
+      preparedIn: Option[String] = None): DataFrame =
+    drain(spark, "s13", batchDf.schema, inputFiles, preparedIn)(
+        stageBulkInput(batchDf, _, inputFiles)) { (stream, root) =>
+      awaitDrain(upsertSink(stream, keyCols, orderCols, s"$root/tbl",
+        s"$root/ckpt", boundedDrain = true).start())
+      val v = latestVersion(spark, s"$root/tbl")
+        .getOrElse(sys.error("upsert drain published no version"))
+      spark.read.parquet(s"$root/tbl/v=$v")
     }
-    require(partFileCount(spark, in) >= 2,
-      s"prepared input must span >= 2 files for cross-batch state: $in")
-    val stream = spark.readStream.schema(batchDf.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    awaitDrain(upsertSink(stream, keyCols, orderCols, s"$root/tbl",
-      s"$root/ckpt", boundedDrain = true).start())
-    val v = latestVersion(spark, s"$root/tbl")
-      .getOrElse(sys.error("upsert drain published no version"))
-    spark.read.parquet(s"$root/tbl/v=$v")
-  }
 
   /** Streaming face of [[graft.dedup.Dedup.incrementalNearDuplicates]]:
     * each micro-batch probes the parquet-backed historical corpus for

@@ -534,6 +534,120 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(got === Map(10L -> "S1", 11L -> "S2"))
   }
 
+  /** A prepared drain input holding one `part-*` file per frame, in order. */
+  private def stagedFiles(frames: Seq[org.apache.spark.sql.DataFrame]): String = {
+    val root = Pipeline.tempRoot("staged")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/in"))
+    frames.zipWithIndex.foreach { case (f, i) =>
+      f.coalesce(1).write.parquet(s"$root/f$i")
+      val part = new java.io.File(s"$root/f$i").listFiles()
+        .filter(_.getName.startsWith("part-")).head
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(f"$root/in/part-$i%05d.parquet"))
+    }
+    s"$root/in"
+  }
+
+  test("s16: homoglyph-safe drain over 3 files drops a spoof that arrives " +
+      "in a different file from its original") {
+    // one file per micro-batch: doc 5 (Cyrillic е/о for Latin e/o) sits two
+    // files after doc 1, so only dedup state carried across batches drops it
+    val files = Seq(
+      Seq((1L, ts("2025-01-01 10:00:00"), "free money now"),
+        (2L, ts("2025-01-01 10:01:00"), "meeting at noon")),
+      Seq((3L, ts("2025-01-01 10:02:00"), "something else"),
+        (4L, ts("2025-01-01 10:03:00"), "quarterly report")),
+      Seq((5L, ts("2025-01-01 10:04:00"), "frее mоnеy now"),
+        (6L, ts("2025-01-01 10:05:00"), "last words")))
+      .map(_.toDF("doc_id", "ts", "text"))
+    val all = files.reduce(_ union _)
+    val got = Pipeline.contentDedupDrainParity(spark, all, textCol = "text",
+        eventTimeCol = "ts", watermark = "7 days", inputFiles = 3,
+        preparedIn = Some(stagedFiles(files)))
+      .as[String].collect().toSet
+    val want = all.select(graft.text.TextAnalysis.fingerprint(
+        graft.text.Confusables.skeleton(col("text"))))
+      .distinct().as[String].collect().toSet
+    assert(got === want)
+    assert(want.size === 5, "the spoof pair shares one skeleton fingerprint")
+  }
+
+  test("s17: heavy-hitter drain over 3 files equals the exact per-window " +
+      "counts when capacity exceeds the distinct items") {
+    val ev = Seq(
+      ("a", "2025-03-01 10:05:00"), ("b", "2025-03-01 12:55:00"),
+      ("a", "2025-03-01 10:45:00"), ("c", "2025-03-01 11:10:00"),
+      ("a", "2025-03-01 12:59:59"), ("b", "2025-03-01 10:30:00"),
+      ("c", "2025-03-01 11:20:00"), ("a", "2025-03-01 11:59:00"),
+      ("b", "2025-03-01 12:01:00"))
+      .map { case (k, t) => (k, ts(t)) }.toDF("item", "ts")
+    def triple(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getString(1), r.getLong(2))
+    val got = Pipeline.heavyHitterDrainParity(spark, ev, eventTimeCol = "ts",
+        itemCol = "item", capacity = 4, width = "1 hour", delay = "7 days",
+        inputFiles = 3)
+      .collect().map(triple).toSet
+    val want = ev.groupBy(window(col("ts"), "1 hour"), col("item")).count()
+      .select(unix_timestamp(col("window.start")), col("item"), col("count"))
+      .collect().map(triple).toSet
+    assert(got === want)
+    assert(want.size === 6) // 10h:(a,2)(b,1) 11h:(c,2)(a,1) 12h:(b,2)(a,1)
+  }
+
+  test("every drain that takes a prepared input rejects one that holds a " +
+      "single bulk file, with or without a sentinel") {
+    val ev = (0 until 6).map(i => (i.toLong, ts(f"2025-01-01 10:${i * 5}%02d:00"),
+        i % 2L, if (i % 3 == 0) "purchase" else "click", i * 1.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val readings = ev.select(col("user_id").cast("string").as("station_id"),
+      col("ts").as("timestamp"), col("value"))
+    def prepared(stage: String => Unit): Option[String] = {
+      val in = s"${Pipeline.tempRoot("onefile")}/in"
+      stage(in)
+      Some(in)
+    }
+    def bulk = prepared(ev.coalesce(1).write.parquet(_))
+    def window1h = prepared(Pipeline.stageWindowDrainInput(spark, ev, "ts",
+      "1 hour", "7 days", _, inputFiles = 1))
+    val drains: Seq[(String, () => Any)] = Seq(
+      "s08" -> (() => Pipeline.dedupDrainParity(spark, ev, "ts",
+        Seq("user_id"), "7 days", preparedIn = bulk)),
+      "s09" -> (() => Pipeline.windowDrainParity(spark, ev, "ts", "event_type",
+        "value", "1 hour", "7 days", preparedIn = window1h)),
+      "s10" -> (() => graft.streaming.Ewma.drainParity(spark, readings,
+        preparedIn = prepared { in =>
+          // two time-ordered slices, then drop the second
+          graft.streaming.Ewma.stageOrderedInput(spark, readings, in)
+          val last = new org.apache.hadoop.fs.Path(s"$in/slice-001.parquet")
+          assert(last.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(last, false))
+        })),
+      "s11" -> (() => Pipeline.sessionDrainParity(spark, ev, "ts", "user_id",
+        "value", 1800L, "7 days", preparedIn = prepared(
+          Pipeline.stageSessionDrainInput(spark, ev, "ts", 1800L, "7 days", _,
+            inputFiles = 1)))),
+      "s12" -> (() => Pipeline.joinDrainParity(spark, ev, "ts", "user_id",
+        col("event_type") === "purchase", col("event_type") === "click",
+        "10 minutes", "7 days", preparedIn = bulk)),
+      "s13" -> (() => Pipeline.upsertDrainParity(spark, ev, Seq("user_id"),
+        Seq("ts", "event_id"), preparedIn = bulk)),
+      "s15" -> (() => Pipeline.outerJoinDrainParity(spark, ev, "ts",
+        "event_id", "user_id", "event_type", "purchase", "click",
+        "10 minutes", "7 days", preparedIn = prepared(
+          Pipeline.stageOuterJoinDrainInput(spark, ev, "ts", "event_id",
+            "user_id", "event_type", "purchase", "click", "10 minutes",
+            "7 days", _, inputFiles = 1)))),
+      "s16" -> (() => Pipeline.contentDedupDrainParity(spark, ev, "event_type",
+        "ts", "7 days", preparedIn = bulk)),
+      "s17" -> (() => Pipeline.heavyHitterDrainParity(spark, ev, "ts",
+        "event_type", 8, "1 hour", "7 days", preparedIn = window1h)))
+    for ((name, run) <- drains) withClue(s"$name: ") {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(
+        "prepared input must span >= 2 files for cross-batch state"))
+    }
+  }
+
   test("latestVersion picks the highest published version, below-bound excluded") {
     val root = Pipeline.tempRoot("lv")
     assert(Pipeline.latestVersion(spark, root).isEmpty)
